@@ -119,6 +119,16 @@ def check_knn(got: dict[int, list[int]], exact: dict[int, list[int]]) -> tuple[f
     return float(np.mean(recalls)), None
 
 
+def check_twins(got: dict[int, list[int]], pairs: list[tuple[int, int]]) -> str | None:
+    """``pairs`` of (twin, copy): each extended vector ``copy`` is an exact
+    copy of base vector ``twin``, so it must be among the twin's top-10."""
+    missed = [(twin, copy) for twin, copy in pairs if copy not in got.get(twin, [])]
+    if missed:
+        return (f"{len(missed)} of {len(pairs)} extended vectors not in their twin's top-10 "
+                f"(twin, copy): {missed[:5]}")
+    return None
+
+
 # ---------------------------------------------------------------- curate
 
 #: Engine MinHash defaults: 12 hashes in 4 bands of 3 rows.

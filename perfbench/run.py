@@ -1,15 +1,15 @@
 """Benchmark entry point.
 
-    python3 perfbench/run.py --workload text --seed 1 --seconds 15 --trace 0
+    python3 perfbench/run.py --workload text --seed 1 --seconds 10 --trace 0
 
 Runs one workload in a fresh engine process (``worker.py``) on
 ``local[<cores>]`` and prints one JSON object as the last line of
 standard output. ``--trace 0`` reports the end-to-end metrics,
 ``--trace 1`` the per-layer metrics from a traced run. Timings in the
-JSON are CPU seconds of the engine's process group; wall-clock figures
-are printed above it. ``setup_s`` covers starting that process until the
-engine's session is ready and the inputs are opened, input generation
-excluded.
+JSON are CPU seconds of the engine's process tree (the worker, its JVM,
+PySpark's daemon and Python workers); wall-clock medians are printed
+above it. ``setup_s`` covers starting that process until the engine's
+session is ready and the inputs are opened, input generation excluded.
 """
 
 from __future__ import annotations
@@ -68,20 +68,39 @@ def worker_env(work: str, event_dir: str | None) -> dict:
     return env
 
 
-def stop_group(proc: subprocess.Popen) -> None:
-    """Kill what is left of the worker's process group and wait for it."""
-    try:
-        os.killpg(proc.pid, signal.SIGKILL)
-    except ProcessLookupError:
-        pass
-    proc.wait()
+def session_pids(sid: int) -> list[int]:
+    """Processes of session ``sid``. PySpark's worker daemon moves to a
+    process group of its own but stays in the worker's session."""
+    pids = []
+    for pid in os.listdir("/proc"):
+        if not pid.isdigit():
+            continue
+        try:
+            with open(f"/proc/{pid}/stat") as fh:
+                stat = fh.read()
+        except OSError:  # the process ended while we listed
+            continue
+        if int(stat[stat.rindex(")") + 2:].split()[3]) == sid:
+            pids.append(int(pid))
+    return pids
+
+
+def stop_session(proc: subprocess.Popen) -> None:
+    """Kill what is left of the worker's session and wait for it to end."""
     deadline = time.time() + 30
     while time.time() < deadline:
-        try:
-            os.killpg(proc.pid, 0)
-        except ProcessLookupError:
-            return
+        pids = session_pids(proc.pid)
+        if not pids:
+            break
+        for pid in pids:
+            try:
+                os.kill(pid, signal.SIGKILL)
+            except ProcessLookupError:
+                pass
+        if proc.pid in pids:
+            proc.wait()
         time.sleep(0.1)
+    proc.wait()
 
 
 def main() -> int:
@@ -112,7 +131,7 @@ def main() -> int:
     proc = subprocess.Popen(cmd, stdout=subprocess.PIPE, text=True, cwd=ROOT,
                             env=worker_env(work, event_dir), start_new_session=True)
     setup_s = setup_wall = result = None
-    timer = signal.signal(signal.SIGALRM, lambda *_: os.killpg(proc.pid, signal.SIGKILL))
+    timer = signal.signal(signal.SIGALRM, lambda *_: proc.kill())
     signal.alarm(HARD_LIMIT_S)
     try:
         for line in proc.stdout:
@@ -127,7 +146,7 @@ def main() -> int:
     finally:
         signal.alarm(0)
         signal.signal(signal.SIGALRM, timer)
-        stop_group(proc)
+        stop_session(proc)
     if proc.returncode != 0 or result is None or setup_s is None:
         print(f"worker failed (exit {proc.returncode})", file=sys.stderr)
         return 1
@@ -135,19 +154,17 @@ def main() -> int:
     e2e = dict(result["e2e"], setup_s=setup_s)
     named = dict(result["named"], setup_wall_s=(setup_wall, "s"))
     for name, (value, unit) in named.items():
-        print(f"{a.workload}: {name} = {value:.6g} {unit} (wall clock)"
-              if unit == "s" else f"{a.workload}: {name} = {value:.6g} {unit}")
+        print(f"{a.workload}: {name} = {value:.6g} {unit}")
     for name, value in e2e.items():
-        print(f"{a.workload}: {name} = {value:.6g} {E2E_UNITS[name]}")
+        print(f"{a.workload}: {name} = {value:.6g} {E2E_UNITS.get(name, 's')}")
     saved = f"{ROOT}/.perfbench_work/untraced-{a.workload}-{a.seed}-{a.seconds:g}.json"
     if a.trace:
         if os.path.exists(saved):
             with open(saved) as fh:
                 base = json.load(fh)
-            for name in E2E_UNITS:
-                if name in base and name in e2e:
-                    print(f"trace overhead {name}: traced - untraced = "
-                          f"{e2e[name] - base[name]:+.6g} {E2E_UNITS[name]}")
+            for name in e2e.keys() & base.keys():
+                print(f"trace overhead {name}: traced - untraced = "
+                      f"{e2e[name] - base[name]:+.6g} {E2E_UNITS.get(name, 's')}")
         else:
             print("trace overhead: no untraced run of this workload, seed and length recorded")
         metrics = result["layers"]

@@ -2,8 +2,8 @@
 seed, and print each metric's median, quartiles and spread (IQR as a share
 of the median). The bounds in BENCHMARK.json come from this output.
 
-    python3 perfbench/steady.py --workload text --seeds 1-10 --seconds 15
-    python3 perfbench/steady.py --workload text --seeds 1-3 --seconds 15 --trace
+    python3 perfbench/steady.py --workload text --seeds 1-10 --seconds 10
+    python3 perfbench/steady.py --workload text --seeds 1-3 --seconds 10 --trace
 
 With ``--trace`` every seed is run untraced and then traced, and the
 traced run prints its overhead against the untraced one.
@@ -41,7 +41,7 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", default="1-10")
-    ap.add_argument("--seconds", type=int, default=15)
+    ap.add_argument("--seconds", type=int, default=10)
     ap.add_argument("--trace", action="store_true")
     a = ap.parse_args()
 

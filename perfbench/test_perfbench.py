@@ -19,6 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import checks  # noqa: E402
 import gen  # noqa: E402
+import worker  # noqa: E402
 
 SMALL = gen.CorpusShape(n_docs=300, vocab=2000, mean_len=90)
 
@@ -94,7 +95,12 @@ def test_top10_check_and_query_kinds(tfidf_data):
     for q in d["queries"]:
         scores = oracle.scores(q)
         assert checks.check_top10(_ranked(scores), scores) is None
-    assert oracle.scores("quoq qaqe") == {}
+    assert oracle.scores(d["oov_query"]) == {}
+    assert checks.check_top10([], {}) is None
+    assert d["oov_query"] not in d["queries"]
+    assert any(len(set(q.split())) < len(q.split()) for q in d["queries"])
+    assert any("q" in w for q in d["queries"] for w in q.split())
+    assert all(oracle.scores(q) for q in d["queries"])
     a, b = d["vocab"][100], d["vocab"][200]
     once, twice = oracle.scores(f"{a} {b}"), oracle.scores(f"{a} {a} {b}")
     single = oracle.scores(a)
@@ -139,6 +145,15 @@ def test_knn_checks_fail_on_wrong_answers():
     assert checks.check_knn({0: [0] + exact[0][:9], 1: exact[1]}, exact)[1]
 
 
+def test_twin_check_fails_on_a_missed_copy():
+    pairs = [(100, 1), (101, 2)]
+    got = {100: [1] + list(range(10, 19)), 101: list(range(20, 29)) + [2]}
+    assert checks.check_twins(got, pairs) is None
+    got[101] = list(range(20, 30))
+    assert "(101, 2)" in checks.check_twins(got, pairs)
+    assert checks.check_twins({100: got[100]}, pairs)
+
+
 def test_ann_twins_are_nearest(tmp_path):
     d = gen.gen_ann(2, str(tmp_path))
     vec = dict(zip(d["base_ids"].tolist(), d["base"]))
@@ -146,6 +161,22 @@ def test_ann_twins_are_nearest(tmp_path):
     vecs = np.concatenate([d["base"], d["ext"]])
     for q, e in list(zip(d["twin_of"].tolist(), d["ext_ids"].tolist()))[:5]:
         assert checks.exact_knn(ids, vecs, q, vec[q])[0] == e
+
+
+# ---------------------------------------------------------------- runs
+
+
+def test_failed_check_leaves_metrics_of_passing_operations(capsys):
+    ops = worker.Ops()
+    ops.run("build", lambda: ((2.0, 3.0), "wrong answer"))
+    ops.run("query", lambda: ((0.5, 0.7), None))
+    ops.run("query", lambda: ((0.7, 0.9), None))
+    ops.run("rewrite", lambda: (_ for _ in ()).throw(RuntimeError("engine error")))
+    assert (ops.attempted, ops.failed, ops.wrong) == (4, 2, {"build"})
+    e2e = worker.summarize(ops, [])
+    assert e2e == {"query_s": 0.6, "query_cpu_s": 0.8}
+    assert worker.summarize(ops, [(0.5, 1), (1.0, 3)])["recall"] == 0.875
+    assert "CHECK FAILED build" in capsys.readouterr().err
 
 
 # ---------------------------------------------------------------- curate

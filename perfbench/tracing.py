@@ -57,13 +57,14 @@ PER_LAYER = {
 }
 
 
-def group_cpu_s() -> float:
-    """CPU seconds used so far by this process group: the benchmark
-    process, the engine's JVM and its Python workers, all threads, plus
-    children they have reaped. Unlike wall time it does not grow while a
-    shared host runs other tenants' work."""
-    pgid = os.getpgrp()
-    ticks = 0
+def tree_cpu_s() -> float:
+    """CPU seconds used so far by this process and all its descendants:
+    the benchmark process, the engine's JVM with all its threads, PySpark's
+    worker daemon and its Python workers (which run in process groups of
+    their own), plus children they have reaped. Unlike wall time it does
+    not grow while a shared host runs other tenants' work."""
+    me = os.getpid()
+    parent, ticks = {}, {}
     for pid in os.listdir("/proc"):
         if not pid.isdigit():
             continue
@@ -73,19 +74,26 @@ def group_cpu_s() -> float:
         except OSError:  # the process ended while we listed
             continue
         fields = stat[stat.rindex(")") + 2:].split()
-        if int(fields[2]) == pgid:
-            ticks += sum(int(x) for x in fields[11:15])
-    return ticks / os.sysconf("SC_CLK_TCK")
+        parent[int(pid)] = int(fields[1])
+        ticks[int(pid)] = sum(int(x) for x in fields[11:15])
+    total = 0
+    for pid, t in ticks.items():
+        p = pid
+        while p > 1 and p != me:
+            p = parent.get(p, 0)
+        if p == me:
+            total += t
+    return total / os.sysconf("SC_CLK_TCK")
 
 
 class Clock:
-    """Wall and process-group CPU seconds since construction."""
+    """Wall and process-tree CPU seconds since construction."""
 
     def __init__(self):
-        self.wall0, self.cpu0 = time.perf_counter(), group_cpu_s()
+        self.wall0, self.cpu0 = time.perf_counter(), tree_cpu_s()
 
     def stop(self) -> tuple[float, float]:
-        return time.perf_counter() - self.wall0, group_cpu_s() - self.cpu0
+        return time.perf_counter() - self.wall0, tree_cpu_s() - self.cpu0
 
 
 class Call:
